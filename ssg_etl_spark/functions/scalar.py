@@ -43,10 +43,9 @@ def utc_wall(ts: Column | str) -> Column:
     ``CAST(.. AS DATE)``, ``date_format``) is zone-free BY TYPE and needs
     no wrapper. This helper exists for the boundaries where a genuine
     instant (session-zone-rendered TIMESTAMP) enters the engine —
-    ``current_timestamp()`` stamps, JDBC/Kafka timestamps, the
-    nanos-as-long rebuild in ``load_table``. ``convert_timezone(NULL,
-    'UTC', ts)`` casts through the current session zone to TIMESTAMP_NTZ
-    carrying the instant's UTC fields.
+    ``current_timestamp()`` stamps, JDBC/Kafka timestamps.
+    ``convert_timezone(NULL, 'UTC', ts)`` casts through the current
+    session zone to TIMESTAMP_NTZ carrying the instant's UTC fields.
 
     NEVER apply this to a TIMESTAMP_NTZ column: Spark would first
     reinterpret the NTZ wall fields as session-zone local time, SHIFTING

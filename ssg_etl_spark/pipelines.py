@@ -33,9 +33,11 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ssg_etl_spark.operators import incremental as inc
 from ssg_etl_spark.operators.rollups import rollup_date_type
+from ssg_etl_spark.schemas import ETL_LOG
 
 SOURCE_NAME = "events_rollup"
 
@@ -49,10 +51,16 @@ def _paths(state_dir: str) -> dict[str, str]:
     }
 
 
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_or_none(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """Scan ``path`` if it exists. The engine-owned audit log passes its
+    declared ``schema`` so the read runs no inference job, however many
+    files the log has grown to."""
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def merge_additive(
@@ -91,7 +99,7 @@ def _write_marker(marker_path: str, payload: dict) -> None:
 
 
 def _log_has_run(spark: SparkSession, log_path: str, run_id: str) -> bool:
-    log = _read_or_none(spark, log_path)
+    log = _read_or_none(spark, log_path, ETL_LOG)
     if log is None:
         return False
     return log.filter(F.col("process_log_id") == run_id).limit(1).count() > 0
@@ -118,8 +126,6 @@ def _recover(spark: SparkSession, p: dict[str, str]) -> None:
             # Swap + log landed; only the marker removal was lost.
             _publish(spark, p, None)
         else:
-            from ssg_etl_spark.schemas import ETL_LOG
-
             raw = committed["log_row"]
             parsed = {
                 f.name: (
@@ -204,7 +210,7 @@ def _run_locked(
 ) -> dict:
     _recover(spark, p)
 
-    log = _read_or_none(spark, p["log"])
+    log = _read_or_none(spark, p["log"], ETL_LOG)
     if log is None:
         log = inc.empty_log(spark)
 

@@ -12,11 +12,15 @@ naive Python datetime converts by its wall fields, where TimestampType
 converts through the HOST zone. The TESTDATA schemas below keep their
 event-time columns as TIMESTAMP because Spark's streaming watermark
 REJECTS NTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE, measured on 4.1):
-these schemas exist for ``readStream``, whose windows/session gaps are
-instant-based (epoch-anchored, zone-free) and whose outputs the
-stream==batch pins compare under the engine's pinned-UTC session. Batch
-scans never use these schemas — ``load_table`` normalizes every
-timestamp column to NTZ at the boundary.
+``readStream`` uses them as declared, with instant-based (epoch-anchored,
+zone-free) windows/session gaps whose outputs the stream==batch pins
+compare under the engine's pinned-UTC session. Batch scans
+(``load_table``) read through ``batch_schema``, the one derived view that
+maps each TIMESTAMP to TIMESTAMP_NTZ: every parquet footer stores those
+columns as ``timestamp[us]`` with ``isAdjustedToUTC=false`` (which batch
+inference also reads as NTZ), and a column stored as a UTC instant reads
+as its UTC wall fields under any session zone once it is declared NTZ.
+Declaring the schema means no scan runs a schema-inference job.
 
 Two families live here:
 
@@ -32,8 +36,9 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
-# Driver testdata tables (parquet already carries these; kept as the single
-# source of truth for tests / generators / streaming schemas).
+# Testdata tables: the single source of truth for batch scans
+# (``batch_schema``), streaming schemas, tests and generators.
+# tests/test_sources.py pins each one against the parquet footers.
 # --------------------------------------------------------------------------
 
 REGION = T.StructType(
@@ -149,6 +154,26 @@ TESTDATA: dict[str, T.StructType] = {
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
 }
+
+
+def batch_schema(name: str) -> T.StructType:
+    """``TESTDATA[name]`` as a batch scan declares it: each TIMESTAMP
+    column becomes TIMESTAMP_NTZ (UTC wall-clock, the engine's time
+    contract). Raises ``KeyError`` for a name outside the registry."""
+    if name not in TESTDATA:
+        raise KeyError(f"{name!r} is not a TESTDATA table; declare it in schemas.py")
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                T.TimestampNTZType() if isinstance(f.dataType, T.TimestampType) else f.dataType,
+                f.nullable,
+                f.metadata,
+            )
+            for f in TESTDATA[name].fields
+        ]
+    )
+
 
 # --------------------------------------------------------------------------
 # Engine-owned tables

@@ -2,9 +2,11 @@
 
 The reference scans whole JDBC tables (sparkFiles/sparkProcess.py:181-188)
 and pandas-reads SQL (build_etl_pipeline_python.py:29); here every scan is a
-declarative ``spark.read.parquet`` so Catalyst gets predicate pushdown and
-column pruning for free (SURVEY §4). At 100 TB the same call reads a
-partitioned parquet/table layout; nothing in the operator code changes.
+declarative ``spark.read.schema(...).parquet`` so Catalyst gets predicate
+pushdown and column pruning for free (SURVEY §4), and the declared schema
+(``schemas.batch_schema``) means building a plan runs no Spark job. At
+100 TB the same call reads a partitioned parquet/table layout; nothing in
+the operator code changes.
 """
 
 from __future__ import annotations
@@ -13,7 +15,8 @@ import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ssg_etl_spark.schemas import TESTDATA, batch_schema
 
 # Belt: load_table re-asserts the UTC session zone — but ONLY on
 # engine-built sessions (session.py marks them via
@@ -41,64 +44,37 @@ def tz_pin_suppressed():
     finally:
         _PIN_SESSION_UTC = prev
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+
+TABLE_NAMES = tuple(TESTDATA)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table. Plain parquet scan — no collect, no cache.
-
-    ``events.parquet`` stores TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects; we read it as int64 nanos (legacy conf) and truncate to
-    microseconds with integer division — byte-identical to DuckDB's
-    nanos→micros truncation, so oracles still hash-match.
+    """Scan one testdata table. Plain parquet scan — no collect, no cache,
+    no Spark job: the schema is declared (``schemas.batch_schema``), never
+    inferred. A name outside ``schemas.TESTDATA`` raises ``KeyError``.
 
     Time contract (round 8): every timestamp column this function returns
-    is TIMESTAMP_NTZ carrying UTC wall-clock fields — calendar extraction
-    downstream is then zone-free BY TYPE, no per-site wrapper. Parquet
-    naive timestamps already read as NTZ; any column that comes back as a
-    session-rendered TIMESTAMP instant (e.g. the nanos→``timestamp_micros``
-    rebuild) is normalized here through ``utc_wall`` (instant → UTC
-    fields, zone-independent).
+    is TIMESTAMP_NTZ carrying UTC wall-clock fields, so calendar extraction
+    downstream is zone-free BY TYPE, with no per-site wrapper. The
+    declaration does the boundary work: naive ``timestamp[us]`` columns
+    read as their wall fields, and a column stored as a UTC instant
+    (``isAdjustedToUTC=true``) reads as its UTC wall fields under any
+    session zone. A TIMESTAMP(NANOS) column fails the scan with a type
+    mismatch; no table stores one.
 
-    Session-conf policy: ``nanosAsLong`` is load-bearing on ANY session —
-    without it the events scan errors outright (vanilla Spark cannot read
-    TIMESTAMP(NANOS) parquet) — and it stays set because it must hold at
-    task-execution time, not just plan time. The UTC zone pin is
-    re-asserted only on ENGINE-BUILT sessions (session.py already sets it
-    at build time; this guards against later app code changing it):
-    embedder-built sessions are never mutated, because the NTZ contract
-    makes every registered query's values zone-invariant without the pin
-    (tools/tz_sweep.py runs the whole registry with the pin suppressed).
+    Session-conf policy: the UTC zone pin is re-asserted only on
+    ENGINE-BUILT sessions (session.py already sets it at build time; this
+    guards against later app code changing it). Embedder-built sessions
+    are never mutated, because the NTZ contract makes every registered
+    query's values zone-invariant without the pin (tools/tz_sweep.py runs
+    the whole registry with the pin suppressed).
     """
-    from ssg_etl_spark.functions.scalar import utc_wall
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = batch_schema(name)
     if _PIN_SESSION_UTC and (
         spark.conf.get("spark.ssg_etl_spark.engineSession", "false") == "true"
     ):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp":  # instant → NTZ-UTC boundary normalization
-            df = df.withColumn(col, utc_wall(F.col(col)))
-    return df
+    return spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def jdbc_read_options(

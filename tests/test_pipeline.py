@@ -107,3 +107,24 @@ def test_uncommitted_staging_is_discarded(spark, sf_dir, tmp_path):
         for r in rollup_date_type(events).collect()
     }
     assert _snapshot(spark, state) == want
+
+
+def test_audit_log_read_declares_its_schema(spark, sf_dir, tmp_path, jobs_started):
+    """The watermark/audit log is engine-owned: reading it back declares
+    ``schemas.ETL_LOG`` and starts no schema-inference job, however many
+    files the log has grown to."""
+    from ssg_etl_spark.pipelines import _paths, _read_or_none
+    from ssg_etl_spark.schemas import ETL_LOG
+
+    state = str(tmp_path / "state")
+    events = load_table(spark, sf_dir, "events")
+    cut = events.selectExpr("percentile_approx(ts, 0.5) p").first().p
+    run_events_rollup_once(spark, events.filter(F.col("ts") <= cut), state)
+    run_events_rollup_once(spark, events, state)
+    log_path = _paths(state)["log"]
+
+    schemas = []
+    assert jobs_started(lambda: schemas.append(_read_or_none(spark, log_path, ETL_LOG).schema)) == []
+    assert schemas == [ETL_LOG]
+    assert spark.read.parquet(log_path).schema == ETL_LOG  # the written footer
+    assert _read_or_none(spark, log_path, ETL_LOG).count() == 2

@@ -588,3 +588,135 @@ def test_load_table_never_mutates_embedder_session_zone(spark, sf_dir):
     finally:
         spark.conf.set("spark.ssg_etl_spark.engineSession", "true")
         spark.conf.set("spark.sql.session.timeZone", prev_zone)
+
+
+# --------------------------------------------------------------------------
+# Declared-schema scans: load_table reads through schemas.batch_schema.
+# --------------------------------------------------------------------------
+
+
+def _footer_fields(schema: T.StructType) -> list[tuple[str, T.DataType]]:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_registry_matches_parquet_footers(spark, sf_dir, scale):
+    """Registry drift fails here, once and loudly: a declared read of a
+    drifted file would silently NULL a renamed column or fail per query.
+    Every fixture table's batch-declared schema equals what Spark infers
+    from its footer (names, order, types), and the fixture set is exactly
+    the registry."""
+    from ssg_etl_spark.schemas import TESTDATA, batch_schema
+
+    data_dir = os.path.join(os.path.dirname(sf_dir), scale)
+    on_disk = sorted(f[: -len(".parquet")] for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    assert on_disk == sorted(TESTDATA)
+    for name in TESTDATA:
+        inferred = spark.read.parquet(os.path.join(data_dir, f"{name}.parquet")).schema
+        assert _footer_fields(batch_schema(name)) == _footer_fields(inferred), name
+
+
+def test_benchmark_tables_match_registry(spark, tmp_path):
+    """The benchmark's generated tables are scanned through load_table
+    too; they must carry the declared schemas as well."""
+    from perfbench import datagen
+
+    from ssg_etl_spark.schemas import TESTDATA, batch_schema
+
+    datagen.generate(str(tmp_path), 0.001)
+    for name in TESTDATA:
+        inferred = spark.read.parquet(str(tmp_path / f"{name}.parquet")).schema
+        assert _footer_fields(batch_schema(name)) == _footer_fields(inferred), name
+
+
+def test_load_table_starts_no_spark_job(sf_dir, spark, jobs_started):
+    """Building each of the ten tables' DataFrames and reading its schema
+    starts no Spark job: the schema is declared, never inferred."""
+    from ssg_etl_spark.sources.tables import TABLE_NAMES, load_table
+
+    assert len(TABLE_NAMES) == 10
+    assert jobs_started(lambda: [load_table(spark, sf_dir, n).schema for n in TABLE_NAMES]) == []
+
+
+def test_load_table_unknown_name_raises(spark, sf_dir):
+    from ssg_etl_spark.sources.tables import load_table
+
+    with pytest.raises(KeyError, match="not a TESTDATA table"):
+        load_table(spark, sf_dir, "lineitems")
+
+
+def _write_events(path: str, ts, **write_kwargs) -> None:
+    """An ``events.parquet`` whose ``ts`` column is the given pyarrow array."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(ts)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": ts,
+            "user_id": pa.array([7] * n, pa.int64()),
+            "event_type": pa.array(["view"] * n),
+            "value": pa.array([1.5] * n),
+            "props": pa.array(["{}"] * n),
+        }),
+        path,
+        **write_kwargs,
+    )
+
+
+@pytest.mark.parametrize("zone", ["America/New_York", "UTC"])
+def test_utc_instant_column_loads_as_utc_wall_fields(spark, tmp_path, zone):
+    """A column stored as a UTC instant (``isAdjustedToUTC=true``) loads as
+    TIMESTAMP_NTZ carrying its UTC wall fields whatever the session zone —
+    the declared NTZ type does the boundary normalization. The UTC pin is
+    suppressed so the zone really varies."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ssg_etl_spark.sources.tables import load_table, tz_pin_suppressed
+
+    walls = [dt.datetime(2024, 1, 1, 2, 30), dt.datetime(2024, 7, 1, 23, 59, 59, 123456)]
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, pa.array(walls, pa.timestamp("us", tz="UTC")))
+    assert pq.read_schema(path).field("ts").type.tz == "UTC"
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        with tz_pin_suppressed():
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            df = load_table(spark, str(tmp_path), "events")
+            rows = df.orderBy("event_id").select(
+                "ts", F.hour("ts").alias("h"), F.to_date("ts").alias("d")
+            ).collect()
+            assert spark.conf.get("spark.sql.session.timeZone") == zone
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    assert [r.ts for r in rows] == walls
+    assert [r.h for r in rows] == [2, 23]
+    assert [r.d for r in rows] == [dt.date(2024, 1, 1), dt.date(2024, 7, 1)]
+
+
+def test_nanos_events_file_raises_instead_of_misreading(spark, tmp_path):
+    """A TIMESTAMP(NANOS) ``ts`` fails the scan with a type mismatch; it is
+    never read back as micros-scaled or misaligned values."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ssg_etl_spark.sources.tables import load_table
+
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([dt.datetime(2024, 1, 1, 2, 30), dt.datetime(2024, 1, 2)], pa.timestamp("ns"))
+    _write_events(path, ts, version="2.6", coerce_timestamps=None)
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+
+    df = load_table(spark, str(tmp_path), "events")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        df.select("event_id", "ts").collect()
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        df.filter(F.hour("ts") == 2).count()
