@@ -210,7 +210,7 @@ def _pair_jaccard(
         F.size(F.array_intersect("_sha", "_shb")).alias("_ni"),
         F.size("_sha").alias("_na"),
         F.size("_shb").alias("_nb"),
-    )
+    ).filter(F.col("_ni") > 0)  # a threshold <= 0 must not admit disjoint pairs
     jacc = withn.select(
         left,
         right,

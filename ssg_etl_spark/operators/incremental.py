@@ -7,8 +7,8 @@ Re-expresses the reference's etl_extract_log protocol:
 * M4 has-new gate    — COUNT(*) > wm branch (:543-605)
 
 State lives in a small append-only parquet log table (schemas.ETL_LOG);
-reads are `agg(max)` over it. At 100 TB the log stays tiny (one row per
-run) — always broadcast, never a shuffle.
+the watermark read is a one-job top-1 over it. At 100 TB the log stays
+tiny (one row per run) — always broadcast, never a shuffle.
 """
 
 from __future__ import annotations
@@ -27,13 +27,17 @@ def empty_log(spark: SparkSession) -> DataFrame:
 
 
 def get_watermark(log: DataFrame, source: str):
-    """M1: latest successful watermark for a source, or None (→ bootstrap)."""
-    row = (
+    """M1: latest successful watermark for a source, or None (→ bootstrap).
+
+    MAX as a top-1 with NULLs last: one job (``TakeOrderedAndProject``),
+    where ``agg(max).first()`` runs two under AQE."""
+    rows = (
         log.filter((F.col("source_connection") == source) & F.col("success"))
-        .agg(F.max("last_extract_ts").alias("wm"))
-        .first()
+        .select("last_extract_ts")
+        .orderBy(F.desc_nulls_last("last_extract_ts"))
+        .take(1)
     )
-    return row["wm"] if row else None
+    return rows[0]["last_extract_ts"] if rows else None
 
 
 def bootstrap_watermark(df: DataFrame, ts_col: str):
@@ -65,6 +69,31 @@ def has_new_data(df: DataFrame, ts_col: str, watermark) -> bool:
     return bool(incremental_read(df, ts_col, watermark).limit(1).take(1))
 
 
+def audit_row(
+    source: str,
+    rows_extracted: int,
+    last_extract_ts: dt.datetime | None,
+    started_at: dt.datetime,
+    success: bool = True,
+    status: str = "completed",
+    error_message: str | None = None,
+) -> dict:
+    """The one schemas.ETL_LOG audit/advance row, as a dict: every log
+    row (``advance_watermark`` and the pipeline's observed run) is built
+    here."""
+    return {
+        "process_log_id": str(uuid.uuid4()),
+        "source_connection": source,
+        "rows_extracted": rows_extracted,
+        "started_at": started_at,
+        "finished_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
+        "last_extract_ts": last_extract_ts,
+        "success": success,
+        "status": status,
+        "error_message": error_message,
+    }
+
+
 def advance_watermark(
     spark: SparkSession,
     source: str,
@@ -75,7 +104,8 @@ def advance_watermark(
     status: str = "completed",
     error_message: str | None = None,
 ) -> DataFrame:
-    """M3: build the one-row audit/advance record for a finished batch.
+    """M3: the one-row audit/advance record for ``batch`` — its count and
+    max event time from one aggregate, shaped by :func:`audit_row`.
 
     Caller appends it to the log table (`mode("append")`); the write is the
     only side effect in the protocol and is idempotent per process_log_id.
@@ -83,17 +113,7 @@ def advance_watermark(
     agg = batch.agg(
         F.count(F.lit(1)).alias("n"), F.max(ts_col).alias("mx")
     ).first()
-    row = {
-        "process_log_id": str(uuid.uuid4()),
-        "source_connection": source,
-        "rows_extracted": agg["n"],
-        "started_at": started_at,
-        "finished_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-        "last_extract_ts": agg["mx"],
-        "success": success,
-        "status": status,
-        "error_message": error_message,
-    }
+    row = audit_row(source, agg["n"], agg["mx"], started_at, success, status, error_message)
     return spark.createDataFrame([row], ETL_LOG)
 
 
@@ -109,9 +129,9 @@ def run_incremental(
 
     The returned batch is lazy; the log row's count/max come from their own
     action. Against an immutable snapshot source (parquet files) the two
-    scans agree; against a LIVE mutable source, persist or write the batch
-    BEFORE deriving anything else from it so the audit row and the loaded
-    rows describe the same data (pipelines.run_events_rollup_once persists).
+    scans agree; against a LIVE mutable source they may not, so derive the
+    count/max from the job that loads the batch instead:
+    pipelines.run_events_rollup_once observes them on its staging write.
     """
     started = started_at or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     wm = get_watermark(log, source)

@@ -18,10 +18,12 @@ into an untouched target) or completes on recovery — never a double-count.
 The swap uses local-FS rename; on HDFS/S3 swap this layer for a
 transactional table format (Delta/Iceberg MERGE), keeping the same logic.
 
-Scale: each run shuffles only the new batch (watermark-pruned scan, cached
-once and reused for the audit aggregate + rollup — one source scan); the
-merge joins target×delta on the rollup key — both aggregate-sized (days ×
-types), not fact-sized.
+Scale: each run scans and shuffles only the new batch (watermark-pruned
+scan), once: the audit row's count and advanced watermark are an
+``Observation`` on that scan, filled by the staging write itself — no
+persist, no separate audit aggregate. The merge joins target×delta on the
+rollup key — both aggregate-sized (days × types), not fact-sized, and the
+target is read with the rollup's declared schema (no inference job).
 """
 
 from __future__ import annotations
@@ -31,7 +33,8 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -221,22 +224,38 @@ def _run_locked(
     started = started_at or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     if wm is None:
         wm = inc.bootstrap_watermark(events, "ts")
-    batch = inc.incremental_read(events, "ts", wm)
-    batch.persist()  # one source scan feeds both the audit agg and the rollup
+        if wm is None:
+            return {"extracted": 0, "skipped": True}  # empty source: no run
+    # The audit count and the advanced watermark ride on the staging write
+    # (one scan of the batch, no persist), so the audit row describes
+    # exactly the rows that were loaded.
+    seen = Observation()
+    batch = inc.incremental_read(events, "ts", wm).observe(
+        seen, F.count(F.lit(1)).alias("n"), F.max("ts").alias("mx")
+    )
+    delta = rollup_date_type(batch)
+    target = _read_or_none(spark, p["target"], delta.schema)
+    merged = merge_additive(
+        target, delta, ["event_date", "event_type"], ["total_value", "n_events"]
+    )
+    merged.write.mode("overwrite").parquet(p["staging"])  # 1) stage
+    row = inc.audit_row(SOURCE_NAME, *_observed(seen), started)
+    row_json = {k: (v.isoformat() if isinstance(v, dt.datetime) else v) for k, v in row.items()}
+    _write_marker(p["marker"], {"run_id": row["process_log_id"], "log_row": row_json})  # 2) commit
+    _publish(spark, p, spark.createDataFrame([row], ETL_LOG))  # 3) swap + audit append + marker removal
+    return {"extracted": row["rows_extracted"], "skipped": False}
+
+
+def _observed(seen: Observation) -> tuple[int, dt.datetime]:
+    """(count, max ts) the staging write observed on the batch. A missing
+    metric raises — never read as 0: the staging stays uncommitted and the
+    next run's ``_recover`` discards it. After the M4 gate the batch is
+    non-empty, so this only fires if the plan lost its ``CollectMetrics``
+    node (AQE drops it once the delta side is an empty relation)."""
     try:
-        log_row = inc.advance_watermark(spark, SOURCE_NAME, batch, "ts", started)
-        delta = rollup_date_type(batch)
-        target = _read_or_none(spark, p["target"])
-        merged = merge_additive(
-            target, delta, ["event_date", "event_type"], ["total_value", "n_events"]
-        )
-        merged.write.mode("overwrite").parquet(p["staging"])  # 1) stage
-        row_dict = {
-            k: (v.isoformat() if isinstance(v, dt.datetime) else v)
-            for k, v in log_row.first().asDict().items()
-        }
-        _write_marker(p["marker"], {"run_id": row_dict["process_log_id"], "log_row": row_dict})  # 2) commit
-        _publish(spark, p, log_row)  # 3) swap + audit append + marker removal
-        return {"extracted": row_dict["rows_extracted"], "skipped": False}
-    finally:
-        batch.unpersist()
+        m = seen.get
+    except Py4JJavaError as e:  # toPyRow's assertion on an empty metrics row
+        raise RuntimeError("staging write reported no audit metrics") from e
+    if m["mx"] is None:  # no row reached the write
+        raise RuntimeError(f"staging write observed an empty batch: {m}")
+    return m["n"], m["mx"]

@@ -18,6 +18,31 @@ def test_minhash_equals_exact(spark, sf_dir):
     assert approx == exact  # verification removes FPs; LSH recall ~1 here
 
 
+def test_pair_jaccard_zero_threshold_matches_brute_force(spark):
+    """At threshold 0.0 every candidate pair passes ``jaccard >= t``, so
+    the verifier must itself drop the pairs that share no shingle: the
+    result is exactly the brute-force set of candidates with |A∩B| > 0."""
+    sets = {
+        1: {"a", "b", "c"},
+        2: {"b", "c", "d"},
+        3: {"x", "y"},
+        4: {"a"},
+        5: {"y", "z", "w", "v"},
+    }
+    shingles = spark.createDataFrame(
+        [(d, s) for d, ss in sets.items() for s in sorted(ss)], "doc_id long, shingle string"
+    )
+    candidates = [(a, b) for a in sets for b in sets if a < b]
+    pairs = spark.createDataFrame(candidates, "doc_a long, doc_b long")
+    got = {(r.doc_a, r.doc_b): r.jaccard for r in dedup._pair_jaccard(pairs, shingles, 0.0).collect()}
+    want = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a, b in candidates
+        if sets[a] & sets[b]
+    }
+    assert got == want
+
+
 def test_prefix_filter_equals_plain_exact(spark, sf_dir):
     """Prefix filtering is LOSSLESS: same pairs and same Jaccard values as
     the all-token join, on the testdata corpus and with the df-cap

@@ -3,6 +3,7 @@ rollup of everything; the no-new-data gate skips; reruns don't double-count."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ssg_etl_spark.operators.rollups import rollup_date_type
@@ -17,28 +18,63 @@ def _snapshot(spark, path):
     }
 
 
-def test_incremental_runs_equal_batch(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("partitions", ["1", "7"])
+def test_incremental_runs_equal_batch(spark, sf_dir, tmp_path, aqe, partitions):
+    conf = {"spark.sql.adaptive.enabled": aqe, "spark.sql.shuffle.partitions": partitions}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        state = str(tmp_path / "state")
+        events = load_table(spark, sf_dir, "events")
+        cut = events.selectExpr("percentile_approx(ts, 0.5) p").first().p
+
+        # Run 1 sees only the first half; run 2 sees everything.
+        m1 = run_events_rollup_once(spark, events.filter(F.col("ts") <= cut), state)
+        assert m1["extracted"] > 0 and not m1["skipped"]
+        m2 = run_events_rollup_once(spark, events, state)
+        assert m2["extracted"] > 0 and not m2["skipped"]
+        assert m1["extracted"] + m2["extracted"] == events.count()
+
+        want = {
+            (r.event_date, r.event_type): (round(r.total_value, 6), r.n_events)
+            for r in rollup_date_type(events).collect()
+        }
+        assert _snapshot(spark, state) == want
+
+        # Run 3: nothing new — the M4 gate skips, target unchanged.
+        m3 = run_events_rollup_once(spark, events, state)
+        assert m3 == {"extracted": 0, "skipped": True}
+        assert _snapshot(spark, state) == want
+
+        # The audit rows (observed on the staging writes) account for every
+        # row once, and the last one carries the advanced watermark.
+        log = spark.read.parquet(state + "/log").orderBy("started_at").collect()
+        assert sum(r.rows_extracted for r in log) == events.count()
+        assert log[-1].last_extract_ts == events.agg(F.max("ts")).first()[0]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_empty_source_first_run_writes_nothing(spark, sf_dir, tmp_path):
+    """No watermark yet and no event time to bootstrap from: the run skips
+    and commits neither a target nor an audit row."""
+    import os
+
+    from ssg_etl_spark import pipelines as P
+
     state = str(tmp_path / "state")
     events = load_table(spark, sf_dir, "events")
-    cut = events.selectExpr("percentile_approx(ts, 0.5) p").first().p
+    m = run_events_rollup_once(spark, events.limit(0), state)
+    assert m == {"extracted": 0, "skipped": True}
+    p = P._paths(state)
+    assert not any(os.path.exists(p[k]) for k in ("log", "target", "staging", "marker"))
 
-    # Run 1 sees only the first half; run 2 sees everything.
-    m1 = run_events_rollup_once(spark, events.filter(F.col("ts") <= cut), state)
-    assert m1["extracted"] > 0 and not m1["skipped"]
-    m2 = run_events_rollup_once(spark, events, state)
-    assert m2["extracted"] > 0 and not m2["skipped"]
-    assert m1["extracted"] + m2["extracted"] == events.count()
-
-    want = {
-        (r.event_date, r.event_type): (round(r.total_value, 6), r.n_events)
-        for r in rollup_date_type(events).collect()
-    }
-    assert _snapshot(spark, state) == want
-
-    # Run 3: nothing new — the M4 gate skips, target unchanged.
-    m3 = run_events_rollup_once(spark, events, state)
-    assert m3 == {"extracted": 0, "skipped": True}
-    assert _snapshot(spark, state) == want
+    # The next run with data bootstraps as a first run.
+    m = run_events_rollup_once(spark, events, state)
+    assert m == {"extracted": events.count(), "skipped": False}
 
 
 def test_crash_after_commit_marker_recovers_exactly_once(spark, sf_dir, tmp_path):
@@ -110,9 +146,10 @@ def test_uncommitted_staging_is_discarded(spark, sf_dir, tmp_path):
 
 
 def test_audit_log_read_declares_its_schema(spark, sf_dir, tmp_path, jobs_started):
-    """The watermark/audit log is engine-owned: reading it back declares
-    ``schemas.ETL_LOG`` and starts no schema-inference job, however many
-    files the log has grown to."""
+    """The watermark/audit log and the rollup target are engine-owned:
+    reading them back declares ``schemas.ETL_LOG`` and the rollup's output
+    schema and starts no schema-inference job, however many files they
+    have grown to."""
     from ssg_etl_spark.pipelines import _paths, _read_or_none
     from ssg_etl_spark.schemas import ETL_LOG
 
@@ -128,3 +165,12 @@ def test_audit_log_read_declares_its_schema(spark, sf_dir, tmp_path, jobs_starte
     assert schemas == [ETL_LOG]
     assert spark.read.parquet(log_path).schema == ETL_LOG  # the written footer
     assert _read_or_none(spark, log_path, ETL_LOG).count() == 2
+
+    # The rollup target is read with the rollup's own output schema.
+    target_path = _paths(state)["target"]
+    declared = rollup_date_type(events).schema
+    schemas = []
+    assert jobs_started(lambda: schemas.append(_read_or_none(spark, target_path, declared).schema)) == []
+    footer = spark.read.parquet(target_path).schema
+    assert [(f.name, f.dataType) for f in schemas[0]] == [(f.name, f.dataType) for f in declared]
+    assert [(f.name, f.dataType) for f in footer] == [(f.name, f.dataType) for f in declared]
